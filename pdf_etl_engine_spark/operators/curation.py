@@ -847,7 +847,7 @@ def x27_ngram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     final 4-decimal round then sits ~1e-9 away from any boundary.
 
     Scale shape: ONE map-only Arrow kernel turns each document into
-    its per-doc trigram COUNTS (doc-local pre-aggregation — the x4j
+    its per-doc trigram COUNTS (doc-local pre-aggregation — the x4
     Arrow-kernel discipline applied to strings), so the only rows that
     ever shuffle are (doc_id, tri, k) with the trigram packed into a
     single BIGINT: three 21-bit Unicode code points in 63 bits, a

@@ -1,6 +1,7 @@
 """The Arrow-kernel bit-exactness contract (r10).
 
-x4j/x4k/x45 route dense linear algebra through numpy kernels whose
+The near-dup engine (fused_lsh_pairs), x4k and x45 route dense linear
+algebra through numpy kernels whose
 correctness rests on ONE claim: an explicit per-index vectorized
 accumulation loop (``for j: acc += a[:, j] * b[:, j]``) runs the
 IDENTICAL IEEE float64 sequence as the oracles' list_sum/list_reduce
@@ -31,12 +32,53 @@ def _pure_python_fold_dot(a: list[float], b: list[float]) -> float:
 
 
 def _kernel_dot_block(A: np.ndarray, B: np.ndarray) -> np.ndarray:
-    """The kernels' accumulation shape (extensions._pair_cosine_kernel
-    / _x4j_bucket_kernel / x4k): strict j-order vectorized adds."""
+    """The kernels' accumulation shape (fused_lsh_pairs' rescore /
+    _bucket_kernel_from_coefs / x4k): strict j-order vectorized adds."""
     acc = np.zeros(len(A))
     for j in range(A.shape[1]):
         acc += A[:, j] * B[:, j]
     return acc
+
+
+def _bucket_pairs(emb, bucket_arr, match):
+    """ID-only candidate join: (vec_a < vec_b) pairs that share a table
+    and whose home buckets satisfy ``match`` (a Column over a.b, b.b)."""
+    from pyspark.sql import functions as F
+
+    buckets = emb.select(
+        "vec_id", F.posexplode(bucket_arr("embedding")).alias("t", "b")
+    )
+    a, b = buckets.alias("a"), buckets.alias("b")
+    return a.join(
+        b,
+        (F.col("a.t") == F.col("b.t"))
+        & match
+        & (F.col("a.vec_id") < F.col("b.vec_id")),
+    ).select(
+        F.col("a.vec_id").alias("vec_a"), F.col("b.vec_id").alias("vec_b")
+    )
+
+
+def _matrix_rescore(cand, sf_dir) -> dict:
+    """The reference rescore: DISTINCT candidate pairs, each scored by
+    a strict j-order fold over the vector matrix (the oracles'
+    list_sum sequence), kept at cos >= 0.25 — the join-then-rescore
+    shape of the SQL oracles, with raw (unrounded) scores."""
+    from pdf_etl_engine_spark.operators.extensions import _vector_matrix
+
+    ids, m, nrm = _vector_matrix(sf_dir).get()
+    pairs = np.array(
+        [(r.vec_a, r.vec_b) for r in cand.distinct().collect()],
+        dtype=np.int64,
+    ).reshape(-1, 2)
+    ia = np.searchsorted(ids, pairs[:, 0])
+    ib = np.searchsorted(ids, pairs[:, 1])
+    cos = _kernel_dot_block(m[ia], m[ib]) / (nrm[ia] * nrm[ib])
+    keep = cos >= 0.25
+    return {
+        (int(a), int(b)): float(c)
+        for (a, b), c in zip(pairs[keep], cos[keep])
+    }
 
 
 def test_kernel_accumulation_bit_equals_pure_fold():
@@ -177,17 +219,16 @@ def test_vector_matrix_handle_lazy_and_pickle_safe(sf_dir):
 
 
 def test_fused_lsh_pairs_bit_equals_matrix_rescore(spark, sf_dir):
-    """fused_lsh_pairs (the x4j2/x14b engine) must emit the EXACT pair
-    set and scores the matrix-kernel path produces at the same
-    parameterization — the fusion and the GEMM screen are pure
+    """fused_lsh_pairs (the one near-dup engine) must emit the EXACT
+    pair set and raw scores of the join-then-rescore reference at the
+    same parameterization — the fusion and the GEMM screen are pure
     execution-strategy changes, never value changes."""
     from pyspark.sql import functions as F
 
     from pdf_etl_engine_spark.catalog import load_table
     from pdf_etl_engine_spark.operators.extensions import (
-        _x4j_bucket_kernel,
-        _pair_cosine_kernel,
-        _vector_matrix,
+        _arith_plane_coefs,
+        _bucket_kernel_from_coefs,
         fused_lsh_pairs,
     )
 
@@ -196,29 +237,10 @@ def test_fused_lsh_pairs_bit_equals_matrix_rescore(spark, sf_dir):
         (r.vec_a, r.vec_b): r.cos_raw
         for r in fused_lsh_pairs(emb, 6, 4, 61, 0.25).collect()
     }
-    bucket_arr = _x4j_bucket_kernel(6, 4, 61)
-    buckets = emb.select(
-        "vec_id", F.posexplode(bucket_arr("embedding")).alias("t", "b")
-    )
-    a, b = buckets.alias("a"), buckets.alias("b")
-    cand = a.join(
-        b,
-        (F.col("a.t") == F.col("b.t"))
-        & (F.col("a.b") == F.col("b.b"))
-        & (F.col("a.vec_id") < F.col("b.vec_id")),
-    ).select(
-        F.col("a.vec_id").alias("vec_a"), F.col("b.vec_id").alias("vec_b")
-    )
-    matrix = {
-        (r.vec_a, r.vec_b): r.cos_raw
-        for r in cand.dropDuplicates(["vec_a", "vec_b"])
-        .mapInPandas(
-            _pair_cosine_kernel(_vector_matrix(sf_dir)),
-            "vec_a bigint, vec_b bigint, cos_raw double",
-        )
-        .filter(F.col("cos_raw") >= 0.25)
-        .collect()
-    }
+    bucket_arr = _bucket_kernel_from_coefs(_arith_plane_coefs(24, 61), 6, 4)
+    cand = _bucket_pairs(emb, bucket_arr, F.col("a.b") == F.col("b.b"))
+    matrix = _matrix_rescore(cand, sf_dir)
+    assert matrix, "reference pair set unexpectedly empty"
     assert fused == matrix  # bit-exact scores, identical pair set
 
 
@@ -239,8 +261,6 @@ def test_multiprobe_canonical_direction_matches_home_hamming1(
     from pdf_etl_engine_spark.operators.extensions import (
         _bucket_kernel_from_coefs,
         _mix_plane_coefs,
-        _pair_cosine_kernel,
-        _vector_matrix,
         fused_lsh_pairs,
     )
 
@@ -253,33 +273,13 @@ def test_multiprobe_canonical_direction_matches_home_hamming1(
         ).collect()
     }
     home_arr = _bucket_kernel_from_coefs(_mix_plane_coefs(L * k, mod), L, k)
-    homes = emb.select(
-        "vec_id", F.posexplode(home_arr("embedding")).alias("t", "b")
+    cand = _bucket_pairs(
+        emb,
+        home_arr,
+        F.bit_count(F.col("a.b").bitwiseXOR(F.col("b.b"))) <= 1,
     )
-    a, b = homes.alias("a"), homes.alias("b")
-    cand = a.join(
-        b,
-        (F.col("a.t") == F.col("b.t"))
-        & (
-            F.bit_count(
-                F.col("a.b").bitwiseXOR(F.col("b.b"))
-            )
-            <= 1
-        )
-        & (F.col("a.vec_id") < F.col("b.vec_id")),
-    ).select(
-        F.col("a.vec_id").alias("vec_a"), F.col("b.vec_id").alias("vec_b")
-    )
-    reference = {
-        (r.vec_a, r.vec_b): r.cos_raw
-        for r in cand.dropDuplicates(["vec_a", "vec_b"])
-        .mapInPandas(
-            _pair_cosine_kernel(_vector_matrix(sf_dir)),
-            "vec_a bigint, vec_b bigint, cos_raw double",
-        )
-        .filter(F.col("cos_raw") >= 0.25)
-        .collect()
-    }
+    reference = _matrix_rescore(cand, sf_dir)
+    assert reference, "reference pair set unexpectedly empty"
     assert fused == reference  # identical candidate set, bit-exact scores
 
 
@@ -296,26 +296,18 @@ def test_fused_lsh_pairs_emission_is_duplicate_free(spark, sf_dir):
 
     from pdf_etl_engine_spark.catalog import load_table
     from pdf_etl_engine_spark.operators.extensions import (
-        _x4j_bucket_kernel,
+        _arith_plane_coefs,
+        _bucket_kernel_from_coefs,
         fused_lsh_pairs,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
     # vacuity guard: at (L=6, k=4) some pair shares a bucket in >=2
     # tables, so first-collision emission has real work to do
-    bucket_arr = _x4j_bucket_kernel(6, 4, 61)
-    buckets = emb.select(
-        "vec_id", F.posexplode(bucket_arr("embedding")).alias("t", "b")
-    )
-    a, b = buckets.alias("a"), buckets.alias("b")
+    bucket_arr = _bucket_kernel_from_coefs(_arith_plane_coefs(24, 61), 6, 4)
     multi = (
-        a.join(
-            b,
-            (F.col("a.t") == F.col("b.t"))
-            & (F.col("a.b") == F.col("b.b"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .groupBy(F.col("a.vec_id"), F.col("b.vec_id"))
+        _bucket_pairs(emb, bucket_arr, F.col("a.b") == F.col("b.b"))
+        .groupBy("vec_a", "vec_b")
         .count()
         .filter(F.col("count") >= 2)
         .count()
@@ -332,6 +324,24 @@ def test_fused_lsh_pairs_emission_is_duplicate_free(spark, sf_dir):
             ).collect()
         ]
         assert len(rows) == len(set(rows)), kwargs
+
+
+def test_fused_lsh_pairs_rejects_zero_norm_embedding(spark):
+    """A zero vector makes every cosine it takes part in NaN; the
+    fused screen would drop those pairs silently where DuckDB keeps
+    them (NaN sorts above every value there), so the kernel must fail
+    loud instead. With one plane, v and -v cannot both have a positive
+    dot, so one of them shares bucket 0 with the zero vector and the
+    group really reaches the rescore."""
+    v = [float(j % 7) - 3.0 for j in range(64)]
+    emb = spark.createDataFrame(
+        [(0, [0.0] * 64), (1, v), (2, [-x for x in v])],
+        "vec_id bigint, embedding array<float>",
+    )
+    from pdf_etl_engine_spark.operators.extensions import fused_lsh_pairs
+
+    with pytest.raises(Exception, match="zero-norm embedding"):
+        fused_lsh_pairs(emb, 1, 1, 61, 0.25).collect()
 
 
 def test_knn_topk_block_hot_row_fallback_is_exact():
@@ -408,55 +418,6 @@ def test_x4l_blocked_knn_matches_x4k_and_stays_block_bounded(
         .first()[0]
     )
     assert q_cells <= math.ceil(n / _X4L_QB)
-
-
-@pytest.mark.slow
-def test_bucketed_vector_store_rescore_end_to_end(spark, sf_dir):
-    """VERDICT r11 #5: the Exchange-free probe was plan-pinned but no
-    artifact ran a rescore through a REAL persisted store. Build the
-    bucketed store from the sf0.01 embeddings, push x4j's candidate
-    pair set through store.rescore, and require the surviving scores
-    to be hash-identical (4-dp stable rounding, the graded contract)
-    to the x4j query output itself."""
-    from pyspark.sql import functions as F
-
-    from pdf_etl_engine_spark import registry
-    from pdf_etl_engine_spark.functions.stable import stable_round
-    from pdf_etl_engine_spark.operators.extensions import (
-        BucketedVectorStore,
-    )
-
-    registry.load_all()
-    want = {
-        (r.vec_a, r.vec_b): r.cos_sim
-        for r in registry.QUERIES["x4j_lsh_near_dup_k10"](
-            spark, sf_dir
-        ).collect()
-    }
-    assert want, "x4j pair set unexpectedly empty"
-
-    store = BucketedVectorStore(spark, "t_e2e_store", n_buckets=8)
-    try:
-        from pdf_etl_engine_spark.catalog import load_table
-
-        store.create(load_table(spark, sf_dir, "embeddings"))
-        cand = spark.createDataFrame(
-            [(a, b) for (a, b) in want], "vec_a bigint, vec_b bigint"
-        )
-        got = {
-            (r.vec_a, r.vec_b): r.cos_sim
-            for r in store.rescore(cand)
-            .filter(F.col("cos_raw") >= 0.25)
-            .select(
-                "vec_a",
-                "vec_b",
-                stable_round(F.col("cos_raw"), 4).alias("cos_sim"),
-            )
-            .collect()
-        }
-        assert got == want
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_e2e_store_vectors")
 
 
 def test_lsh_modulus_keeps_planes_duplicate_free():

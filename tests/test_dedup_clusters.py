@@ -22,8 +22,9 @@ from pyspark.sql import functions as F
 from pdf_etl_engine_spark import registry
 from pdf_etl_engine_spark.catalog import load_table
 from pdf_etl_engine_spark.operators.extensions import (
+    _embedding_count,
+    _x14b_edges,
     connected_components,
-    lsh_near_dup_pairs,
 )
 
 registry.load_all()
@@ -57,13 +58,16 @@ def test_star_cc_exact_on_handcrafted_graph(spark):
 
 @pytest.mark.slow
 def test_x14b_edge_gen_has_no_cartesian_product(spark):
+    """The edge relation x14b feeds connected_components, exactly as
+    x14b builds it: the fused per-bucket kernel, no pair product."""
     emb = load_table(spark, SF_DIR, "embeddings")
     plan = (
-        lsh_near_dup_pairs(emb)
+        _x14b_edges(emb, _embedding_count(SF_DIR))
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
     )
+    assert "FlatMapGroupsInPandas" in plan, plan
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
 

@@ -9,16 +9,16 @@ net: every window query runs on the deterministic sf1 tables
 (tools/synth_sf1.py) on BOTH engines with the normalization the local
 parity suite uses (12-significant-digit floats, column-order
 insensitive). Per-side 300 s timeouts (the heavy rows run 100-150 s per side at
-sf1: x4j spark 107 s, x45b oracle 146 s measured) — a query that
+sf1: x45b oracle 146 s measured) — a query that
 blows up combinatorially at sf1 is reported as such, not hidden.
 
-Scale substitution (VERDICT r9 #4): the graded window pins
-x4i_lsh_near_dup_arith at k=3 — a bucket width chosen for the ~2k
-grading corpora whose buckets go dense at sf1's 20k vectors (the one
-red row in r9's 49/50). At sf1 this sweep runs the SAME pipeline at
-its production parameterization, x4j_lsh_near_dup_k10 (registered
-with its own DuckDB oracle and locally graded at sf0.01 like every
-tail entry), and records the substitution in the per-query output.
+Scale substitution (VERDICT r9 #4): x4i_lsh_near_dup_arith pins k=3
+— a bucket width chosen for the ~2k grading corpora whose buckets go
+dense at sf1's 20k vectors (the one red row in r9's 49/50). At sf1
+this sweep runs the SAME engine and plane family at its production
+parameterization, x4j2_lsh_near_dup_colocated (k=10, its own DuckDB
+oracle, graded in the window), and records the substitution in the
+per-query output.
 
 Run: python tools/sf1_parity.py  → one JSON line, also persisted to
 SF1_PARITY_LAST.json at the repo root (round artifact, VERDICT r9 #5).
@@ -40,7 +40,7 @@ TIMEOUT_S = 300.0
 # graded-window name -> the parameterization that holds at sf1 (same
 # machinery, corpus-sized bucket width; see module docstring)
 SF1_SUBSTITUTE = {
-    "x4i_lsh_near_dup_arith": "x4j_lsh_near_dup_k10",
+    "x4i_lsh_near_dup_arith": "x4j2_lsh_near_dup_colocated",
 }
 
 # r14: streaming ops graded at sf0.01 in the driver window whose
